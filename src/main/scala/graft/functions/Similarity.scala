@@ -1644,29 +1644,16 @@ object Similarity {
     * two trainings are independent — different models over the same
     * corpus — but each is a serial chain of per-sweep collect jobs, so
     * running them back-to-back paid both latency chains in sequence.
-    * One extra submission thread overlaps them; Spark schedules jobs
-    * from both freely. Each training's own sweep sequence (and so its
-    * result) is bit-identical to the sequential form — determinism
+    * [[graft.Branches]] runs them on two fresh threads; Spark schedules
+    * jobs from both freely. Each training's own sweep sequence (and so
+    * its result) is bit-identical to the sequential form — determinism
     * lives inside each chain, not between them.
-    *
-    * A FRESH thread, not a pooled executor: Spark's job group /
-    * description are inheritable-thread-locals snapshotted at thread
-    * CREATION, so a pooled thread would tag (and leak cancellation
-    * scope for) whichever gate first built the pool.
     */
   def trainIvfPq(corpus: DataFrame, kCoarse: Int, m: Int, k: Int,
       dims: Int, iters: Int = 3): (DataFrame, DataFrame) = {
-    @volatile var cb: DataFrame = null
-    @volatile var err: Throwable = null
-    val worker = new Thread(() => {
-      try cb = pqTrain(corpus, m, k, dims, iters)
-      catch { case e: Throwable => err = e }
-    }, "pq-train")
-    worker.start()
-    val cents =
-      try ivfTrain(corpus, kCoarse, iters)
-      finally worker.join()
-    if (err != null) throw err
+    val Seq(cents, cb) = graft.Branches.run(Seq(
+      () => ivfTrain(corpus, kCoarse, iters),
+      () => pqTrain(corpus, m, k, dims, iters)))
     (cents, cb)
   }
 

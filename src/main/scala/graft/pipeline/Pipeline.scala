@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.Branches
 import graft.operators.Combinators
 import graft.sinks.{HyperEquivalentSink, HyperSink}
 import graft.sources.excel.XlsxWriter
@@ -63,15 +64,24 @@ class Pipeline(
   /** A6 — "table load": register each sheet as a cached temp view under
     * its derived name. Replaces the reference's SQLite materialization
     * (query_iterator.py:101-107) with zero data movement.
+    *
+    * One branch per (file, sheet), all running at once ([[Branches]]):
+    * each loads its sheet, caches it and fills the cache with a single
+    * `noop` write BEFORE the view is registered. Every sheet is thus
+    * parsed exactly once, in parallel, before any query runs — and no
+    * two jobs ever race to fill the same cached block (filling lazily
+    * from concurrent bundles would compute a partition twice and log
+    * `Block rdd_N already exists`).
     */
   def registerViews(fsheets: Seq[Fsheet]): Unit =
-    fsheets.foreach { fs =>
+    Branches.run(fsheets.map { fs => () =>
       val df = spark.read.format("excel")
         .option("sheet", fs.sheet)
         .load(Paths.get(workingDir, fs.fileName).toString)
         .cache()
+      df.write.format("noop").mode("overwrite").save()
       df.createOrReplaceTempView(fs.sqlTableName)
-    }
+    })
 
   def dropViews(fsheets: Seq[Fsheet]): Unit =
     fsheets.foreach(fs => spark.catalog.dropTempView(fs.sqlTableName))
@@ -151,15 +161,23 @@ class Pipeline(
   }
 
   /** A17 — full run: match → dedup → views → query → combine → export
-    * (query_iterator.py:32-55). Returns the written output paths.
+    * (query_iterator.py:32-55). Returns the written output paths, in
+    * bundle order.
+    *
+    * Bundles are independent once the views exist, so each exports on
+    * its own branch ([[Branches]]) and their sinks' jobs overlap. The
+    * views are dropped only after EVERY branch has finished — also when
+    * one fails, whose error is then rethrown (the first in bundle order;
+    * the other bundles' files are complete by then).
     */
   def run(bundles: Seq[QueryBundle]): Seq[String] = {
     val allMatches = bundles.flatMap(_.fileMatches).distinct
     val matched = matchDirectoryFiles(allMatches)
     val fsheets = distinctFsheets(bundles, matched)
-    registerViews(fsheets)
-    try bundles.map(b => exportBundle(b, matched))
-    finally dropViews(fsheets)
+    try {
+      registerViews(fsheets)
+      Branches.run(bundles.map(b => () => exportBundle(b, matched)))
+    } finally dropViews(fsheets)
   }
 }
 

@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
+import graft.Branches
+
 /** Standalone LZ4 *block* codec (the public block format from lz4.org:
   * token byte = literal-length nibble | match-length nibble, 255-run
   * length extensions, 16-bit little-endian match offsets). Implemented
@@ -384,12 +386,14 @@ object HyperBinary {
     * `maxRows` guards that contract at scale: the materialization is
     * bounded (LIMIT maxRows+1, a single pass — no separate count job),
     * so pointing a fact table at the sink raises a clear error instead
-    * of a driver OOM.
+    * of a driver OOM. The tables are collected concurrently, one
+    * [[Branches]] branch each; when several fail, the first table's
+    * error (in input order) is raised.
     */
   def write(path: String, tables: Seq[(String, DataFrame)],
       compatInt32: Boolean = false, maxRows: Int = 1000000): Unit = {
     require(maxRows > 0, s"HyperBinary: maxRows must be positive (got $maxRows)")
-    val collected = tables.map { case (name, df) =>
+    val collected = Branches.run(tables.map { case (name, df) => () =>
       val rows = df.limit(maxRows + 1).collect()
       if (rows.length > maxRows)
         throw new IllegalArgumentException(
@@ -397,7 +401,7 @@ object HyperBinary {
             "this sink materializes extracts on the driver — for large " +
             "results write parquet (or raise maxRows deliberately)")
       (name, df.schema, rows)
-    }
+    })
     val withNulls = collected.map { case (name, schema, rows) =>
       val nullCounts = schema.fields.indices
         .map(c => rows.count(_.isNullAt(c)).toLong).toArray

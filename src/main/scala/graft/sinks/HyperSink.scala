@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
+import graft.Branches
+
 /** Spark type → Tableau Hyper SqlType DDL mapping.
   *
   * Reproduces the reference's dtype map (query_iterator.py:217-227):
@@ -65,6 +67,17 @@ trait HyperSink {
   def write(path: String, tables: Seq[(String, DataFrame)]): Unit
 }
 
+/** The [[HyperSink]] this repo ships: `catalog.json`, one parquet copy
+  * per table and the binary `extract.hyper`.
+  *
+  * One branch per table ([[Branches]]) writes the table's `coalesce(1)`
+  * parquet copy, all at once; the binary extract is then built from those
+  * copies (`spark.read.parquet`), so each table's query plan executes
+  * exactly ONCE. The read-back differs from the original schema only in
+  * nullability, which the binary catalog does not record, so the extract
+  * is byte-identical to [[HyperBinary.write]] over the original tables.
+  * `catalog.json` keeps the original nullability.
+  */
 class HyperEquivalentSink(compatInt32: Boolean = false) extends HyperSink {
 
   private def jsonEscape(s: String): String =
@@ -93,13 +106,16 @@ class HyperEquivalentSink(compatInt32: Boolean = false) extends HyperSink {
       // the DDL string mirrors the CREATE TABLE statements hyperd logs
       // (hyperd.log:3513, 3531)
       val ddl = s"""CREATE TABLE "public"."$name" ($colDdl)"""
-      df.coalesce(1).write.mode("overwrite")
-        .parquet(root.resolve(name).toString)
       s"""{"name":"${jsonEscape(name)}","columns":$cols,"ddl":"${jsonEscape(ddl)}"}"""
     }
+    val copies = Branches.run(tables.map { case (name, df) => () =>
+      val dir = root.resolve(name).toString
+      df.coalesce(1).write.mode("overwrite").parquet(dir)
+      name -> df.sparkSession.read.parquet(dir)
+    })
     val catalog = s"""{"format":"hyper-equivalent","tables":[${ddls.mkString(",")}]}"""
     Files.write(root.resolve("catalog.json"),
       catalog.getBytes(StandardCharsets.UTF_8))
-    HyperBinary.write(root.resolve("extract.hyper").toString, tables, compatInt32)
+    HyperBinary.write(root.resolve("extract.hyper").toString, copies, compatInt32)
   }
 }

@@ -132,15 +132,14 @@ object XlsxWriter {
         val w = new java.io.OutputStreamWriter(zos, "UTF-8")
         w.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
         w.write("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
-        val schema = df.schema
+        val fields = df.schema.fields
+        val letters = fields.indices.map(colRef).toArray
         def stringCell(ref: String, s: String): String =
           if (sharedStrings) s"""<c r="$ref" t="s"><v>${sstRef(s)}</v></c>"""
           else s"""<c r="$ref" t="inlineStr"><is><t>${xmlEscape(s)}</t></is></c>"""
         // header row
         w.write("<row r=\"1\">")
-        schema.fields.zipWithIndex.foreach { case (f, c) =>
-          w.write(stringCell(s"${colRef(c)}1", f.name))
-        }
+        fields.indices.foreach(c => w.write(stringCell(s"${letters(c)}1", fields(c).name)))
         w.write("</row>")
         var r = 2
         val it = df.toLocalIterator()
@@ -152,11 +151,13 @@ object XlsxWriter {
                 "results to parquet, or raise maxRows deliberately if " +
                 "still within the format limit")
           val row = it.next()
-          w.write(s"""<row r="$r">""")
-          schema.fields.zipWithIndex.foreach { case (f, c) =>
+          val rowNum = r.toString
+          w.write(s"""<row r="$rowNum">""")
+          var c = 0
+          while (c < fields.length) {
             if (!row.isNullAt(c)) {
-              val ref = s"${colRef(c)}$r"
-              f.dataType match {
+              val ref = letters(c) + rowNum
+              fields(c).dataType match {
                 case _: NumericType =>
                   w.write(s"""<c r="$ref"><v>${row.get(c)}</v></c>""")
                 case BooleanType =>
@@ -183,6 +184,7 @@ object XlsxWriter {
                   w.write(stringCell(ref, String.valueOf(row.get(c))))
               }
             }
+            c += 1
           }
           w.write("</row>")
           r += 1

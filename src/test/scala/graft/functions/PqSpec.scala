@@ -473,9 +473,9 @@ class PqSpec extends SparkSpec {
   }
 
   test("trainIvfPq (concurrent) is bit-identical to the sequential pair") {
-    // the r19 overlap: one extra submission thread runs pqTrain while
-    // ivfTrain runs on the caller — each chain's sweep sequence (and so
-    // its integer-exact result) must be untouched by the scheduling
+    // the r19 overlap: ivfTrain and pqTrain run on two Branches
+    // threads at once — each chain's sweep sequence (and so its
+    // integer-exact result) must be untouched by the scheduling
     val (cents, cb) = Similarity.trainIvfPq(emb, kCoarse = 2, m = 2,
       k = 3, dims = dims)
     val seqCents = Similarity.ivfTrain(emb, k = 2).collect().toSet

@@ -2,9 +2,12 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
 
 import graft.SparkSpec
+import graft.sinks.{HyperBinary, HyperEquivalentSink}
 import graft.sources.excel.XlsxWriter
 
 /** End-to-end pipeline parity: reproduces the reference's committed
@@ -137,6 +140,73 @@ class PipelineSpec extends SparkSpec {
 
     // Q1 decision: views dropped once after the run
     assert(!spark.catalog.tableExists("consumer_complaints_Sheet1_sheet"))
+  }
+
+  /** Every entry of a zip file, name → content, in file order. Zip
+    * headers carry timestamps, so workbooks compare entry by entry. */
+  private def zipEntries(path: String): Seq[(String, Seq[Byte])] = {
+    val zip = new java.util.zip.ZipFile(path)
+    try zip.entries().asScala.map(e =>
+      e.getName -> zip.getInputStream(e).readAllBytes().toSeq).toSeq
+    finally zip.close()
+  }
+
+  private def bytes(path: String): Seq[Byte] =
+    Files.readAllBytes(Paths.get(path)).toSeq
+
+  test("concurrent run writes the same bytes as the sinks called directly") {
+    val dir = setupDir()
+    val both = Seq(bundles.head,
+      bundles.head.copy(exportFileName = "complaints_xl", format = ExportFormat.Excel))
+    val outs = new Pipeline(spark, dir).run(both)
+    assert(outs == Seq(s"$dir/complaints_by_bank.hyper", s"$dir/complaints_xl.xlsx"))
+
+    // the same combined tables, handed to each sink directly
+    val ref = Files.createTempDirectory("pipeline-direct").toString
+    val p = new Pipeline(spark, dir)
+    val matched = p.matchDirectoryFiles(both.flatMap(_.fileMatches).distinct)
+    val fsheets = p.distinctFsheets(both, matched)
+    p.registerViews(fsheets)
+    try {
+      val combined = p.combineBundle(both.head, matched)
+      HyperBinary.write(s"$ref/extract.hyper", combined)
+      new HyperEquivalentSink().write(s"$ref/sink.hyper", combined)
+      XlsxWriter.write(s"$ref/direct.xlsx", combined)
+    } finally p.dropViews(fsheets)
+
+    val hyper = s"$dir/complaints_by_bank.hyper"
+    assert(bytes(s"$hyper/extract.hyper") == bytes(s"$ref/extract.hyper"))
+    assert(bytes(s"$hyper/catalog.json") == bytes(s"$ref/sink.hyper/catalog.json"))
+    assert(bytes(s"$hyper/extract.hyper") == bytes(s"$ref/sink.hyper/extract.hyper"))
+    assert(zipEntries(s"$dir/complaints_xl.xlsx") == zipEntries(s"$ref/direct.xlsx"))
+  }
+
+  test("a failing bundle is rethrown after the other bundle's file is complete") {
+    val dir = setupDir()
+    val failing = QueryBundle(
+      queries = Seq(Query("boom",
+        "SELECT CAST(raise_error('bundle boom') AS STRING) AS x FROM Sheet1.sheet",
+        pivotTable = true)),
+      fileMatches = Seq("consumer_complaints.xlsx"),
+      sheets = Seq("Sheet1"),
+      exportFileName = "broken",
+      format = ExportFormat.Hyper)
+    val good = bundles.head.copy(exportFileName = "good", format = ExportFormat.Excel)
+    def tempViews = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val viewsBefore = tempViews
+
+    // the failing bundle comes first: run one bundle after another and
+    // the good bundle would never have been written
+    val err = intercept[Exception](new Pipeline(spark, dir).run(Seq(failing, good)))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("bundle boom")), err)
+
+    val back = spark.read.format("excel")
+      .option("sheet", "num_of_complaints_per_company")
+      .load(s"$dir/good.xlsx")
+    assert(back.count() == 2)
+    assert(tempViews == viewsBefore, "no temp view outlives a failed run")
   }
 
   test("excel export: one sheet per query (A15)") {

@@ -93,7 +93,7 @@ class HyperArtifactParitySpec extends AnyFunSuite with org.scalatest.BeforeAndAf
     }).groupBy(identity).map { case (k, v) => k -> v.size }
 
   test("artifact column records decode into the golden rows") {
-    val tables = HyperArtifact.decodeTables(artifactPath)
+    val tables = HyperArtifact.decodeTables(ReferenceInputs.file(artifactPath))
     assert(tables.map(_._1) ==
       Seq("complaint_counts_by_company", "num_of_complaints_per_company"))
     val Seq((_, s1, r1), (_, s2, r2)) = tables
@@ -130,7 +130,7 @@ class HyperArtifactParitySpec extends AnyFunSuite with org.scalatest.BeforeAndAf
   }
 
   test("column binding records: exact ordinals and LZ4 flags for all 8 blocks") {
-    val data = Files.readAllBytes(Paths.get(artifactPath))
+    val data = ReferenceInputs.bytes(artifactPath)
     val bindings = HyperArtifact.scanBindings(data)
     val byOffset = bindings.map(b => b.blockOffset -> b).toMap
     // every decoded column block has exactly one binding record
@@ -159,7 +159,7 @@ class HyperArtifactParitySpec extends AnyFunSuite with org.scalatest.BeforeAndAf
   }
 
   test("object arena (header 0x40) walks to the artifact's complete directory") {
-    val data = Files.readAllBytes(Paths.get(artifactPath))
+    val data = ReferenceInputs.bytes(artifactPath)
     // live arena: header word 0x40 → descriptor 0xa540, exponent 8,
     // 16 records, zero junk slots (a single malformed slot would void
     // the walk — readObjectArena returns empty then)
@@ -263,7 +263,7 @@ class HyperArtifactParitySpec extends AnyFunSuite with org.scalatest.BeforeAndAf
     assume(Files.exists(Paths.get(artifactPath)))
     val workDir = Files.createTempDirectory("artifact-parity").toString
     Seq("consumer_complaints.xlsx", "consumer_complaints1.xlsx").foreach { f =>
-      Files.copy(Paths.get(referenceDir, f), Paths.get(workDir, f),
+      Files.copy(Paths.get(ReferenceInputs.file(s"$referenceDir/$f")), Paths.get(workDir, f),
         StandardCopyOption.REPLACE_EXISTING)
     }
 
@@ -278,7 +278,7 @@ class HyperArtifactParitySpec extends AnyFunSuite with org.scalatest.BeforeAndAf
         try p.combineBundle(bundle, matched)
         finally p.dropViews(fsheets)
 
-      val decoded = HyperArtifact.decodeTables(artifactPath).map {
+      val decoded = HyperArtifact.decodeTables(ReferenceInputs.file(artifactPath)).map {
         case (name, schema, rows) => name -> (schema, rows)
       }.toMap
 

@@ -35,11 +35,11 @@ class HyperBinarySpec extends SparkSpec {
     // Everything asserted here is the OBSERVABLE structure the writer
     // mirrors (HYPER_FORMAT.md) — reading the reference's committed
     // extract with our own parser.
-    val data = Files.readAllBytes(java.nio.file.Paths.get(artifact))
+    val data = ReferenceInputs.bytes(artifact)
     assert(new String(data, 0, 5) == "Hyper")
     assert(data(5) == 8 && data(8) == 1)
 
-    val catalogs = HyperBinary.catalogJsons(artifact)
+    val catalogs = HyperBinary.catalogJsons(ReferenceInputs.file(artifact))
     assert(catalogs.length == 2, "expected live catalog + genesis copy")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val live = mapper.readTree(catalogs.head)
@@ -157,7 +157,7 @@ class HyperBinarySpec extends SparkSpec {
 
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val ours = mapper.readTree(HyperBinary.catalogJsons(path).head).get("relations")
-    val theirs = mapper.readTree(HyperBinary.catalogJsons(artifact).head).get("relations")
+    val theirs = mapper.readTree(HyperBinary.catalogJsons(ReferenceInputs.file(artifact)).head).get("relations")
     for (r <- 0 until 2; field <- Seq("oid", "name", "owner", "parent",
         "attributes", "partitionKey", "partitionedRelation", "type")) {
       assert(ours.get(r).get(field) == theirs.get(r).get(field),
@@ -173,7 +173,7 @@ class HyperBinarySpec extends SparkSpec {
     // frame values are CRC32C with NO pre/post inversion. Each assertion
     // recomputes a frame from the committed artifact's own bytes with
     // our implementation and compares with the stored value.
-    val data = Files.readAllBytes(java.nio.file.Paths.get(artifact))
+    val data = ReferenceInputs.bytes(artifact)
     val buf = java.nio.ByteBuffer.wrap(data).order(java.nio.ByteOrder.LITTLE_ENDIAN)
 
     // header pages are self-verifying: last u32 = crc of first 4092
@@ -222,7 +222,7 @@ class HyperBinarySpec extends SparkSpec {
     // block algorithm into a payload that starts with the table's row
     // count (6 — matching hyperd.log's COPY rows) and embeds the
     // table's string values.
-    val data = Files.readAllBytes(java.nio.file.Paths.get(artifact))
+    val data = ReferenceInputs.bytes(artifact)
     val buf = java.nio.ByteBuffer.wrap(data).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     val uncompLen = buf.getInt(0x2880)
     val (payload, _) = Lz4Block.decompress(data, 0x2884, uncompLen)
